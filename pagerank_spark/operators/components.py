@@ -6,25 +6,47 @@ extension mandated by BASELINE.json.north_star. Not present in the C
 reference (SURVEY.md §2.3); built on the same partitioned edge-table
 substrate as PageRank.
 
+The input is read ONCE: one checkpointed distinct of unordered pairs
+(self-loops kept, so a vertex whose only edge is a self-loop stays in
+the vertex set) yields both the vertex set and the simple edge set.
+
 Each round is two bounded shuffles (a groupBy-min per star operation,
 expressed as aggregate + re-join so Catalyst plans partial hash
 aggregates). Edges monotonically contract toward stars rooted at each
 component's minimum id; convergence (edge set unchanged) is detected
-with an order-insensitive xxhash64 checksum + count — one tiny action
-per round. Lineage is truncated per round with ``localCheckpoint`` so
-the plan stays O(1) across iterations.
+with a count, then an order-insensitive xxhash64 checksum only when
+the counts agree. Lineage is truncated per round with
+``localCheckpoint`` so the plan stays O(1) across iterations.
+
+Hand-off: the star operations preserve the vertex set and the
+connectivity, so any intermediate edge set has the same min-id labels
+as the input. ``auto`` therefore tests the edge count against
+``LOCAL_CC_MAX_E`` before the first round and after every round, and
+as soon as the (contracted) edge set fits it is collected once and
+finished by a vectorised min-label union-find on the driver.
 
 Semantics: components are those of the UNDIRECTED simple graph
 (direction ignored, self-loops and duplicates irrelevant — they never
 change connectivity). Output labels are exact: every vertex maps to
 the minimum vertex id in its component, so "components match exactly"
 (north_rule) is well-defined and partitioning-independent.
+
+Each call logs one record on the ``pagerank_spark`` logger whose
+``trace`` attribute is ``{"op", "path", "rounds", "round_edges"}``:
+``path`` is ``"local"``, ``"stars"`` or ``"stars→local"``, and
+``round_edges`` maps a round (0 = the input's simple edge set, or the
+resumed round) to its edge count — ``None`` where nothing was counted.
 """
 
 from __future__ import annotations
 
+import logging
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger("pagerank_spark")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -65,73 +87,78 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
+def _checksum(e: DataFrame) -> int:
     # bit_xor: order-insensitive, no ANSI overflow (edge set is distinct,
     # so xor-cancellation of duplicates cannot occur).
-    row = e.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"] or 0)
+    row = e.agg(F.bit_xor(F.xxhash64("src", "dst")).alias("h")).collect()[0]
+    return int(row["h"] or 0)
 
 
 def _count(e: DataFrame) -> int:
     return int(e.agg(F.count(F.lit(1)).alias("c")).collect()[0]["c"])
 
 
-# Below this many DISTINCT simple edges the whole graph fits trivially
-# on the driver and the star rounds are pure job-scheduling overhead
+# At or below this many distinct simple edges the graph fits trivially
+# on the driver and star rounds are pure job-scheduling overhead
 # (~0.4s/job x ~4 jobs/round x rounds); `auto` then runs one collect +
-# union-find with IDENTICAL output labels (min id per component) — the
-# same adaptive strategy pagerank's local mode uses. Composed operators
-# (simhash_dedup_near, dedup_near: CC over a fingerprint/pair graph)
-# hit this constantly: their graphs are tiny even on huge corpora.
-# Cutoff sized in BYTES, not vibes: 250k edge pairs = ~4 MB — under
-# the 10 MB build-side norm a broadcast join already ships to every
-# executor, and the union-find touches each edge once (~1 μs/edge,
-# measured 2.4x faster than star rounds at 123k edges on local[32]).
+# vectorised union-find with IDENTICAL output labels (min id per
+# component) — the same adaptive strategy pagerank's local mode uses.
+# The test applies to the input and to every contracted round, so a
+# large graph pays Stars rounds only until it shrinks under the cutoff.
+# Composed operators (simhash_dedup_near, dedup_near: CC over a
+# fingerprint/pair graph) hit this constantly: their graphs are tiny
+# even on huge corpora. Cutoff sized in BYTES, not vibes: 250k edge
+# pairs = ~4 MB — under the 10 MB build-side norm a broadcast join
+# already ships to every executor.
 LOCAL_CC_MAX_E = 250_000
 
 
-def _cc_local(spark, vertices: DataFrame, e: DataFrame) -> DataFrame:
-    """Driver union-find over the (small) distinct simple edge set.
+def _min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Min-label of each index ``0..n-1`` over the undirected edges
+    ``(a[i], b[i])``: ``lab[x]`` is the smallest index connected to x.
 
-    Union-by-min-root: attaching the larger root under the smaller
-    keeps every tree rooted at its component's minimum index, and ids
-    are mapped through a SORTED unique array, so root index order ==
-    id order — the returned label is exactly the min id, bit-identical
-    to the star-contraction fixpoint.
+    Vectorised hooking + pointer jumping. Invariant: ``lab[x] ≤ x`` and
+    ``lab[x]`` is connected to x. Each pass hooks, for every edge still
+    joining two trees, the larger root under the smaller one
+    (``minimum.at`` keeps the least candidate), then jumps pointers
+    until every vertex points at its root; edges inside one tree drop
+    out. At the fixpoint a component has one root r with ``lab[r] = r``,
+    and its minimum vertex v has ``lab[v] ≤ v`` inside the component,
+    so r = v: the labels equal a sequential union-by-min-root.
     """
-    import numpy as np
+    lab = np.arange(n)
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            return lab
+        a, b, la, lb = a[cross], b[cross], la[cross], lb[cross]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
+
+def _cc_local(spark, pairs: DataFrame) -> DataFrame:
+    """Driver union-find over a small ``(src, dst)`` pair set: every
+    endpoint is a vertex, self-loops only add their vertex.
+
+    Ids map through the SORTED ``np.unique`` array, so index order ==
+    id order and the min-index label is exactly the min id —
+    bit-identical to the star-contraction fixpoint.
+    """
     import pyarrow as pa
 
-    epdf = e.toPandas()
-    vs = vertices.toPandas()["id"].to_numpy()
-    uniq = np.unique(
-        np.concatenate([vs, epdf["src"].to_numpy(), epdf["dst"].to_numpy()])
+    p = pairs.toPandas()
+    ends = np.concatenate(
+        [p["src"].to_numpy(dtype=np.int64), p["dst"].to_numpy(dtype=np.int64)]
     )
-    parent = np.arange(len(uniq))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for x, y in zip(
-        np.searchsorted(uniq, epdf["src"].to_numpy()),
-        np.searchsorted(uniq, epdf["dst"].to_numpy()),
-    ):
-        rx, ry = find(int(x)), find(int(y))
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-    roots = np.array([find(i) for i in range(len(uniq))], dtype=np.int64)
-    vs_sorted = np.sort(vs)
-    vi = np.searchsorted(uniq, vs_sorted)
+    ids, idx = np.unique(ends, return_inverse=True)
+    lab = _min_labels(idx[: len(p)], idx[len(p):], len(ids))
     return spark.createDataFrame(
-        pa.table(
-            {"id": pa.array(vs_sorted), "component": pa.array(uniq[roots[vi]])}
-        )
+        pa.table({"id": pa.array(ids), "component": pa.array(ids[lab])})
     )
 
 
@@ -143,78 +170,99 @@ def connected_components(
 
     Every vertex appearing in ``edges`` gets a row (isolated vertices —
     present only via self-loops — label themselves). ``mode``:
-    ``"auto"`` (local union-find below LOCAL_CC_MAX_E distinct simple
-    edges, star contraction above), ``"local"``, or ``"stars"``.
+    ``"local"`` (driver union-find), ``"stars"`` (star contraction to
+    its fixpoint, the reference for the other two) or ``"auto"``: star
+    rounds while the edge set has more than LOCAL_CC_MAX_E distinct
+    simple edges, then — before the first round or after any later one
+    — the driver union-find on the contracted edge set.
     ``checkpoint_dir``/``resume`` give the star-contraction loop the
     same durable restart contract as PageRank (north_rule): per-round
-    edge-set parquet + manifest, resumed mid-fixpoint after a crash.
+    edge-set parquet + manifest, resumed mid-fixpoint after a crash. A
+    hand-off never marks the manifest done, so any later resume (in
+    either mode) continues the fixpoint from the persisted round.
     """
     if mode not in ("auto", "local", "stars"):
         raise ValueError("mode must be 'auto', 'local' or 'stars'")
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
+    from pagerank_spark.plans.iterate import iterate
+
+    spark = edges.sparkSession
+    pairs = (
+        edges.select(
             F.greatest("src", "dst").alias("src"),
             F.least("src", "dst").alias("dst"),
         )
         .distinct()
         .localCheckpoint()
     )
-    # Convergence = edge set unchanged. Count-first detection: the
-    # contraction shrinks the edge set most rounds, so a bare count()
-    # (no per-row hash evaluation) usually proves "changed" on its own;
-    # the order-insensitive xxhash64 checksum runs only when counts of
-    # consecutive rounds agree. The previous round's hash is then
-    # computed lazily from its localCheckpoint (an in-memory scan), so
-    # the cheap path never costs an extra star round.
-    from pagerank_spark.plans.iterate import iterate
+    e = pairs.where(F.col("src") != F.col("dst"))
+    counts: dict[int, int] = {}
+    hashes: dict[int, int] = {}
 
-    e_count = _count(e)
-    if mode == "local" or (mode == "auto" and e_count <= LOCAL_CC_MAX_E):
-        return _cc_local(edges.sparkSession, vertices, e)
+    def _edges(s: DataFrame, r: int) -> int:
+        if r not in counts:
+            counts[r] = _count(s)
+        return counts[r]
 
-    ctx = {"count": e_count, "hash": None}
+    def _converged(prev: DataFrame, new: DataFrame, r: int) -> bool:
+        # edge set unchanged; the contraction shrinks it most rounds,
+        # so the count usually decides and each checksum runs at most
+        # once per round
+        if _edges(new, r) != _edges(prev, r - 1):
+            return False
+        if r not in hashes:
+            hashes[r] = _checksum(new)
+        if r - 1 not in hashes:
+            hashes[r - 1] = _checksum(prev)
+        return hashes[r] == hashes[r - 1]
 
-    def _converged(prev: DataFrame, new: DataFrame, _round: int) -> bool:
-        new_count = _count(new)
-        if new_count == ctx["count"]:
-            if ctx["hash"] is None:
-                ctx["hash"] = _signature(prev)[1]
-            new_hash = _signature(new)[1]
-            if new_hash == ctx["hash"]:
-                return True
-            ctx["hash"] = new_hash
-        else:
-            ctx["hash"] = None
-        ctx["count"] = new_count
-        return False
+    def _fits(s: DataFrame, r: int) -> bool:
+        return _edges(s, r) <= LOCAL_CC_MAX_E
 
-    e, _rounds, _done = iterate(
-        e,
-        lambda s, _r: _small_star(_large_star(s)),
-        _converged,
-        max_iter,
-        warn=(
-            f"connected_components: edge-set signature did not stabilize "
-            f"within max_iter={max_iter} rounds; labels may not be final "
-            "(a non-converged edge set is not a star forest)"
-        ),
-        checkpoint_dir=checkpoint_dir,
-        resume=resume,
-    )
-    # Converged edge set is a star forest: (u → component root). Roots
-    # and isolated vertices label themselves via the left join.
-    labels = vertices.join(
-        e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
-        "id",
-        "left",
-    ).select("id", F.coalesce("component", "id").alias("component"))
+    rounds, handoff = 0, mode == "local"
+    if not handoff:
+        e, rounds, done = iterate(
+            e,
+            lambda s, _r: _small_star(_large_star(s)),
+            _converged,
+            max_iter,
+            warn=(
+                f"connected_components: edge-set signature did not stabilize "
+                f"within max_iter={max_iter} rounds; labels may not be final "
+                "(a non-converged edge set is not a star forest)"
+            ),
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+            stop=_fits if mode == "auto" else None,
+        )
+        handoff = mode == "auto" and not done and _fits(e, rounds)
+    if handoff:
+        path = "stars→local" if rounds else "local"
+        # a contracted edge set keeps every non-isolated vertex; the
+        # self-loop pairs bring back the isolated ones
+        labels = _cc_local(
+            spark, e.union(pairs.where(F.col("src") == F.col("dst")))
+        )
+    else:
+        path = "stars"
+        # Converged edge set is a star forest: (u → component root).
+        # Roots and isolated vertices label themselves via the left join.
+        vertices = (
+            pairs.select(F.col("src").alias("id"))
+            .union(pairs.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+        labels = vertices.join(
+            e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
+            "id",
+            "left",
+        ).select("id", F.coalesce("component", "id").alias("component"))
+    trace = {
+        "op": "connected_components",
+        "path": path,
+        "rounds": rounds,
+        "round_edges": dict(sorted(counts.items())) or None,
+    }
+    _log.info("connected_components %s", trace, extra={"trace": trace})
     return labels
 
 

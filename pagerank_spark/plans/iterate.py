@@ -36,6 +36,7 @@ def iterate(
     warn: str | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = False,
+    stop: Callable[[DataFrame, int], bool] | None = None,
 ) -> tuple[DataFrame, int, bool]:
     """Run ``state = step(state, round)`` until ``converged`` or
     ``max_iter`` rounds; returns ``(state, rounds_run, converged)``.
@@ -63,6 +64,13 @@ def iterate(
       recompute-from-state). The manifest is written AFTER the state
       parquet, so a crash between the two resumes one round back —
       never forward into missing data.
+    - ``stop(state, round)``: early exit that is NOT convergence (e.g.
+      CC handing a contracted edge set to a driver-side finish). It is
+      tested on the starting (fresh or resumed) state and after every
+      unconverged round; when it fires the loop returns
+      ``(state, rounds, False)`` without the ``warn`` warning, and the
+      manifest keeps ``done: false`` — a later resume continues the
+      fixpoint instead of taking the stopped state for a converged one.
     """
     rounds = 0
     done = False
@@ -84,7 +92,9 @@ def iterate(
         if meta.get("done"):
             return state, rounds, True
     start = rounds
-    for rounds in range(start + 1, max_iter + 1):
+    stopped = stop is not None and stop(state, start)
+    last = start if stopped else max_iter
+    for rounds in range(start + 1, last + 1):
         new = step(state, rounds)
         if checkpoint:
             # eager on purpose: several convergence callbacks probe with
@@ -102,13 +112,15 @@ def iterate(
             with open(tmp, "w") as f:
                 json.dump({"round": rounds, "done": bool(fin)}, f)
             os.replace(tmp, manifest)
+        state = new
         if fin:
-            state = new
             done = True
             break
-        state = new
+        if stop is not None and stop(state, rounds):
+            stopped = True
+            break
     rounds = max(rounds, start)
-    if not done and warn is not None:
+    if not done and not stopped and warn is not None:
         import warnings
 
         warnings.warn(warn, RuntimeWarning, stacklevel=2)

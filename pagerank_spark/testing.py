@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # FIXTURES.md F1/F2 — copies of the reference validation graphs
-# (/root/reference/DEMO.txt:4-11, DEMODISPARI.txt:4-13).
+# (DEMO.txt:4-11, DEMODISPARI.txt:4-13); ``write_snap`` writes them
+# back out in the reference's file format.
 DEMO_EDGES = [(0, 1), (0, 3), (0, 2), (1, 2), (1, 3), (2, 0), (3, 2), (3, 0)]
 DEMO_N = 4
 DEMODISPARI_EDGES = DEMO_EDGES + [(3, 4), (4, 2)]
@@ -25,6 +26,17 @@ DEMODISPARI_N = 5
 # FIXTURES.md — both converge in 12 iterations).
 DEMO_GOLDEN = [0.3681495, 0.1418013, 0.2879685, 0.2020806]
 DEMODISPARI_GOLDEN = [0.3287118, 0.1231462, 0.2929534, 0.1754708, 0.0797179]
+
+
+def write_snap(path, pairs, n: int, first_node: int = 0) -> None:
+    """Write ``pairs`` over ``n`` vertices as a SNAP text file in the
+    reference's layout (FIXTURES.md): ``#`` header lines ending in
+    ``Nodes: n Edges: e``, one ``src<TAB>dst`` line per edge with ids
+    shifted up by ``first_node``, no trailing newline."""
+    lines = ["# Directed graph", f"# Nodes: {n} Edges: {len(pairs)}"]
+    lines += [f"{s + first_node}\t{t + first_node}" for s, t in pairs]
+    with open(path, "w") as f:
+        f.write("\n".join(lines))
 
 
 def edges_df(spark: SparkSession, pairs) -> DataFrame:

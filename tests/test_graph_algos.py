@@ -237,9 +237,26 @@ def test_shortest_paths_bfs_and_weighted(spark):
         shortest_paths(e, [])
 
 
-def test_cc_local_and_stars_paths_agree(spark):
-    """auto picks union-find below LOCAL_CC_MAX_E; the two physical
-    paths must produce identical min-id labels."""
+def _cc_trace(caplog):
+    """The ``trace`` of the last connected_components log record."""
+    recs = [r for r in caplog.records if getattr(r, "trace", None)
+            and r.trace["op"] == "connected_components"]
+    return recs[-1].trace
+
+
+def _simple_edge_count(e):
+    """Distinct undirected non-loop pairs: CC's round-0 edge count."""
+    return len({(max(r["src"], r["dst"]), min(r["src"], r["dst"]))
+                for r in e.collect() if r["src"] != r["dst"]})
+
+
+def test_cc_local_and_stars_paths_agree(spark, monkeypatch, caplog):
+    """auto picks union-find below LOCAL_CC_MAX_E, before the first
+    star round or after any later one; every physical path must produce
+    identical min-id labels."""
+    import logging
+
+    from pagerank_spark.operators import components
     from pagerank_spark.operators.components import connected_components
     from pagerank_spark.testing import synth_edges
 
@@ -249,15 +266,32 @@ def test_cc_local_and_stars_paths_agree(spark):
     stars = {(r["id"], r["component"]) for r in
              connected_components(e, mode="stars").collect()}
     assert loc == stars
-    # negative ids (fingerprint graphs) work in both paths
+    # hand-off: a cut-off between the input's simple-edge count and the
+    # final star forest's size (one edge per non-root vertex) makes
+    # auto run star rounds, then finish on the driver
+    simple = _simple_edge_count(e)
+    forest = sum(1 for v, c in stars if v != c)
+    assert forest < simple
+    cut = (simple + forest) // 2
+    monkeypatch.setattr(components, "LOCAL_CC_MAX_E", cut)
+    with caplog.at_level(logging.INFO, logger="pagerank_spark"):
+        auto = {(r["id"], r["component"]) for r in
+                connected_components(e, mode="auto").collect()}
+    tr = _cc_trace(caplog)
+    assert tr["path"] == "stars→local" and tr["rounds"] >= 1
+    assert tr["round_edges"][0] == simple > cut
+    assert tr["round_edges"][tr["rounds"]] <= cut
+    assert all(tr["round_edges"][r] > cut for r in range(tr["rounds"]))
+    assert auto == stars == loc
+    monkeypatch.undo()
+    # negative ids (fingerprint graphs) work in every path
     neg = spark.createDataFrame(
         [(-5, -9), (-9, 3), (7, 7)], "src long, dst long"
     )
-    loc = {(r["id"], r["component"]) for r in
-           connected_components(neg, mode="local").collect()}
-    stars = {(r["id"], r["component"]) for r in
-             connected_components(neg, mode="stars").collect()}
-    assert loc == stars == {(-5, -9), (-9, -9), (3, -9), (7, 7)}
+    for mode in ("auto", "local", "stars"):
+        got = {(r["id"], r["component"]) for r in
+               connected_components(neg, mode=mode).collect()}
+        assert got == {(-5, -9), (-9, -9), (3, -9), (7, 7)}, mode
     e.unpersist()
 
 
@@ -911,6 +945,20 @@ def test_new_operators_handle_empty_graph(spark):
     ).count() == 0
     row = graph_summary(e).collect()[0]
     assert row["n_vertices"] == 0 and row["triangles"] == 0
+    # connected components on degenerate inputs, in every mode
+    from pagerank_spark.operators.components import connected_components
+
+    for pairs, want in (
+        ([], set()),
+        ([(3, 3), (1, 1), (3, 3)], {(1, 1), (3, 3)}),
+        ([(1, 2), (2, 1), (1, 2), (5, 4), (4, 5)],
+         {(1, 1), (2, 1), (4, 4), (5, 4)}),
+    ):
+        g = spark.createDataFrame(pairs, "src long, dst long")
+        for mode in ("auto", "local", "stars"):
+            got = {(r["id"], r["component"])
+                   for r in connected_components(g, mode=mode).collect()}
+            assert got == want, (pairs, mode)
 
 
 def test_linkgraph_from_cooccurrence_string_items(spark):
@@ -962,9 +1010,12 @@ def test_weighted_modularity(spark):
     assert modularity(z, lab, weight_col="w").collect()[0]["modularity"] == 0.0
 
 
-def test_cc_checkpoint_resume_equality(spark, tmp_path):
+def test_cc_checkpoint_resume_equality(spark, tmp_path, monkeypatch, caplog):
     """A CC run killed mid-fixpoint resumes from the round parquet and
-    produces labels identical to an uninterrupted run."""
+    produces labels identical to an uninterrupted run; so does a run
+    that handed off to the driver, resumed in either mode."""
+    import logging
+
     from pagerank_spark.operators.components import connected_components
     from pagerank_spark.testing import synth_edges
 
@@ -1003,6 +1054,45 @@ def test_cc_checkpoint_resume_equality(spark, tmp_path):
         ).collect()
     }
     assert again == want
+
+    # auto hands the round-1 edge set to the driver: the manifest must
+    # NOT be done, since that edge set is not yet a star forest
+    from pagerank_spark.operators import components
+
+    simple = _simple_edge_count(e)
+    monkeypatch.setattr(components, "LOCAL_CC_MAX_E", simple - 1)
+    ck2 = str(tmp_path / "cc_handoff")
+    got = {
+        (r["id"], r["component"])
+        for r in connected_components(e, checkpoint_dir=ck2).collect()
+    }
+    assert got == want
+    meta = json.load(open(os.path.join(ck2, "iterate_manifest.json")))
+    assert meta == {"round": 1, "done": False}
+    # read as a star forest, the hand-off state would mislabel vertices
+    forest = {
+        r["src"]: r["dst"]
+        for r in spark.read.parquet(os.path.join(ck2, "round_00001")).collect()
+    }
+    assert {(v, forest.get(v, v)) for v, _c in want} != want
+    with caplog.at_level(logging.INFO, logger="pagerank_spark"):
+        resumed = {
+            (r["id"], r["component"])
+            for r in connected_components(
+                e, checkpoint_dir=ck2, resume=True
+            ).collect()
+        }
+    assert resumed == want
+    assert _cc_trace(caplog)["path"] == "stars→local"
+    # a Stars resume of the same directory continues the fixpoint
+    stars = {
+        (r["id"], r["component"])
+        for r in connected_components(
+            e, mode="stars", checkpoint_dir=ck2, resume=True
+        ).collect()
+    }
+    assert stars == want
+    assert json.load(open(os.path.join(ck2, "iterate_manifest.json")))["done"]
     e.unpersist()
 
 

@@ -3,11 +3,13 @@
 from pyspark.sql import functions as F
 
 from pagerank_spark import LinkGraph
-from pagerank_spark.testing import synth_corpus
+from pagerank_spark.testing import DEMO_EDGES, DEMO_N, synth_corpus, write_snap
 
 
-def test_linkgraph_from_snap(spark):
-    g = LinkGraph.from_snap(spark, "/root/reference/DEMO.txt", first_node=0)
+def test_linkgraph_from_snap(spark, tmp_path):
+    p = tmp_path / "DEMO.txt"
+    write_snap(p, DEMO_EDGES, DEMO_N)
+    g = LinkGraph.from_snap(spark, str(p), first_node=0)
     assert g.n == 4
     res = g.pagerank(dangling="leak")
     assert res.iterations == 12

@@ -95,6 +95,22 @@ def _union_find(pairs):
     return out
 
 
+@given(pairs=st.lists(
+    st.tuples(st.integers(0, 59), st.integers(0, 59)), max_size=150))
+@settings(max_examples=200, deadline=None, derandomize=True)
+def test_min_labels_matches_union_find(pairs):
+    """The driver path's vectorised hooking + pointer jumping gives the
+    sequential union-by-min-root labels (no Spark: many examples)."""
+    from pagerank_spark.operators.components import _min_labels
+
+    a = np.array([p[0] for p in pairs], dtype=np.int64)
+    b = np.array([p[1] for p in pairs], dtype=np.int64)
+    lab = _min_labels(a, b, 60)
+    want = _union_find(pairs)
+    assert {x: int(lab[x]) for x in want} == want
+    assert all(lab[x] == x for x in range(60) if x not in want)
+
+
 @given(pairs=graphs)
 @SET
 def test_cc_matches_union_find(spark, pairs):

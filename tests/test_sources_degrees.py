@@ -10,11 +10,19 @@ from pagerank_spark import (
     pagerank,
     read_snap_edges,
 )
-from pagerank_spark.testing import DEMO_EDGES, DEMO_GOLDEN, edges_df
+from pagerank_spark.testing import (
+    DEMO_EDGES,
+    DEMO_GOLDEN,
+    DEMO_N,
+    edges_df,
+    write_snap,
+)
 
 
-def test_read_snap_demo(spark):
-    edges, n, e = read_snap_edges(spark, "/root/reference/DEMO.txt", first_node=0)
+def test_read_snap_demo(spark, tmp_path):
+    p = tmp_path / "DEMO.txt"
+    write_snap(p, DEMO_EDGES, DEMO_N)
+    edges, n, e = read_snap_edges(spark, str(p), first_node=0)
     assert (n, e) == (4, 8)
     got = sorted((r["src"], r["dst"]) for r in edges.collect())
     assert got == sorted(DEMO_EDGES)
@@ -28,16 +36,29 @@ def test_read_snap_one_indexed(spark, tmp_path):
     assert sorted((r["src"], r["dst"]) for r in edges.collect()) == [(0, 1), (1, 2)]
 
 
-def test_rete_loads_and_ranks(spark):
-    # F3: the reference's mid-size graph, 1-indexed (RETE.txt:3).
-    edges, n, e = read_snap_edges(spark, "/root/reference/RETE.txt", first_node=1)
-    assert (n, e) == (4039, 176468)
+def test_rete_loads_and_ranks(spark, tmp_path):
+    # F3's shape (a 1-indexed file of a symmetric graph without dangling
+    # vertices) on a deterministic graph: a ring gives every vertex an
+    # out-edge, the chords i -> 7i+3 and i -> i*i+5 (mod n) vary the
+    # degrees, and every edge is written with its reverse.
+    n = 500
+    pairs = set()
+    for i in range(n):
+        for j in (i + 1, 7 * i + 3, i * i + 5):
+            if j % n != i:
+                pairs |= {(i, j % n), (j % n, i)}
+    pairs = sorted(pairs)
+    p = tmp_path / "RETE.txt"
+    write_snap(p, pairs, n, first_node=1)
+    edges, n_read, e = read_snap_edges(spark, str(p), first_node=1)
+    assert (n_read, e) == (n, len(pairs))
     assert edges.count() == e
+    assert sorted((r["src"], r["dst"]) for r in edges.collect()) == pairs
     res = pagerank(edges, n=n, dangling="leak")
     assert res.converged
     v = np.array([r["rank"] for r in res.ranks.collect()])
     assert len(v) == n and (v > 0).all()
-    # ego-Facebook is symmetric (no dangling): mass conserved even in leak mode
+    # symmetric, no dangling: mass conserved even in leak mode
     assert abs(v.sum() - 1.0) < 1e-6
 
 
